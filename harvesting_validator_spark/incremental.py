@@ -48,6 +48,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from harvesting_validator_spark import fs
+from harvesting_validator_spark.runtime import local_frame
 
 # IRI-for-IRI with Constants.java:4-10
 TASK_HARVESTING_FILTERING = (
@@ -92,7 +93,7 @@ class IncrementalLedger:
 
     def _read(self, path: str, schema: str) -> DataFrame:
         if not fs.exists(self.spark, path):
-            return self.spark.createDataFrame([], schema)
+            return local_frame(self.spark, [], schema)
         return self.spark.read.parquet(path)
 
     def read(self) -> DataFrame:
@@ -263,8 +264,8 @@ class IncrementalLedger:
         From here on, this run's ledger partition is pruned from every
         future new_docs anti-join; rows at or below the watermark are
         excluded by the column filter alone."""
-        self.spark.createDataFrame(
-            [(run_id, float(high_watermark), time.time())],
+        local_frame(
+            self.spark, [(run_id, float(high_watermark), time.time())],
             "run_id string, high_watermark double, committed_at double",
         ).write.mode("append").parquet(self.watermarks_path)
 

@@ -23,6 +23,15 @@ Determinism: stage outputs are pure functions of inputs (deterministic IDs
 everywhere, C4), so a resumed run produces byte-identical tables. The
 lineage table itself is append-only; readers take the LATEST row per
 (run_id, stage, partition_id) by started_at tiebreak attempt counter.
+
+One lineage read per runner: a CheckpointedRunner loads its run's rows
+once, when it starts, and answers ``stage_status``/``next_attempt`` from
+them. Every row it records is appended to the table before the stage
+moves on, and added to those rows, so after a crash the table holds
+everything the run got to. This assumes a single writer per run_id,
+which ``next_attempt``'s read-then-append rests on anyway: two drivers
+sharing a run_id would pick the same attempt number. A LineageStore
+built without a run_id reads the table on every call.
 """
 
 from __future__ import annotations
@@ -30,12 +39,14 @@ from __future__ import annotations
 import time
 import traceback
 import uuid
-from collections.abc import Callable
+from collections import namedtuple
+from collections.abc import Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from harvesting_validator_spark import fs
+from harvesting_validator_spark.runtime import local_frame
 
 STATUS_SCHEDULED = "scheduled"
 STATUS_BUSY = "busy"
@@ -47,10 +58,28 @@ _LINEAGE_SCHEMA = (
     "attempt int, started_at double, finished_at double, n_rows bigint, "
     "wall_ms double, error string"
 )
+LineageRow = namedtuple(
+    "LineageRow", [c.split()[0] for c in _LINEAGE_SCHEMA.split(", ")]
+)
 
 
 def abbreviate(msg: str, n: int = 1024) -> str:
     return msg if len(msg) <= n else msg[: n - 3] + "..."
+
+
+def latest_status_in(rows: Iterable[LineageRow], stage: str) -> str | None:
+    """Status of the stage's latest summary marker (partition_id = -1):
+    max attempt, then max finished_at, so the terminal marker supersedes
+    the BUSY marker written at stage start under the same attempt."""
+    markers = [r for r in rows if r.stage == stage and r.partition_id == -1]
+    if not markers:
+        return None
+    return max(markers, key=lambda r: (r.attempt, r.finished_at)).status
+
+
+def next_attempt_in(rows: Iterable[LineageRow], stage: str) -> int:
+    """One past the highest attempt recorded for the stage (1 if none)."""
+    return max((r.attempt for r in rows if r.stage == stage), default=0) + 1
 
 
 class LineageStore:
@@ -60,20 +89,42 @@ class LineageStore:
     stage); reads aggregate latest-attempt status. At cluster scale this
     is an Iceberg table with snapshot isolation; the storage seam is this
     class only.
+
+    Given a ``run_id``, the store reads that run's rows once here and
+    answers ``stage_status``/``next_attempt`` for the run from them,
+    adding every row it appends (single writer per run_id, see the
+    module docstring). Other runs, and stores built without a run_id,
+    are answered from the table.
     """
 
-    def __init__(self, spark: SparkSession, warehouse: str):
+    def __init__(self, spark: SparkSession, warehouse: str,
+                 run_id: str | None = None):
         self.spark = spark
         self.warehouse = warehouse
         self.path = fs.join(warehouse, "_lineage")
+        self.run_id = run_id
+        self._run_rows = self._rows(run_id) if run_id is not None else None
 
-    def _append(self, rows: list[tuple]) -> None:
-        df = self.spark.createDataFrame(rows, _LINEAGE_SCHEMA)
+    def _rows(self, run_id: str, stage: str | None = None) -> list[LineageRow]:
+        df = self.read().filter(F.col("run_id") == run_id)
+        if stage is not None:
+            df = df.filter(F.col("stage") == stage)
+        return [LineageRow(*r) for r in df.select(*LineageRow._fields).collect()]
+
+    def _rows_for(self, run_id: str, stage: str) -> list[LineageRow]:
+        if run_id == self.run_id:
+            return self._run_rows
+        return self._rows(run_id, stage)
+
+    def _append(self, rows: list[LineageRow]) -> None:
+        df = local_frame(self.spark, rows, _LINEAGE_SCHEMA)
         df.coalesce(1).write.mode("append").parquet(self.path)
+        if self._run_rows is not None:
+            self._run_rows.extend(r for r in rows if r.run_id == self.run_id)
 
     def read(self) -> DataFrame:
         if not fs.exists(self.spark, self.path):
-            return self.spark.createDataFrame([], _LINEAGE_SCHEMA)
+            return local_frame(self.spark, [], _LINEAGE_SCHEMA)
         return self.spark.read.parquet(self.path)
 
     def latest(self) -> DataFrame:
@@ -93,30 +144,10 @@ class LineageStore:
         )
 
     def stage_status(self, run_id: str, stage: str) -> str | None:
-        """Latest summary-marker (partition_id = -1) row wins; BUSY rows
-        written at stage start are superseded by the terminal marker of
-        the same attempt via the finished_at tiebreak."""
-        row = (
-            self.read()
-            .filter(
-                (F.col("run_id") == run_id)
-                & (F.col("stage") == stage)
-                & (F.col("partition_id") == -1)
-            )
-            .orderBy(F.desc("attempt"), F.desc("finished_at"))
-            .select("status")
-            .first()
-        )
-        return row.status if row else None
+        return latest_status_in(self._rows_for(run_id, stage), stage)
 
     def next_attempt(self, run_id: str, stage: str) -> int:
-        row = (
-            self.read()
-            .filter((F.col("run_id") == run_id) & (F.col("stage") == stage))
-            .agg(F.max("attempt").alias("a"))
-            .first()
-        )
-        return (row.a or 0) + 1 if row and row.a is not None else 1
+        return next_attempt_in(self._rows_for(run_id, stage), stage)
 
     def record_stage(
         self,
@@ -136,7 +167,7 @@ class LineageStore:
         parts = [(-1, total)] + list(per_partition or [])
         self._append(
             [
-                (
+                LineageRow(
                     run_id, stage, int(pid), status, attempt,
                     started_at, now, int(n), wall,
                     abbreviate(error) if error else None,
@@ -156,7 +187,7 @@ class CheckpointedRunner:
         self.spark = spark
         self.warehouse = warehouse
         self.run_id = run_id or uuid.uuid4().hex[:12]
-        self.store = LineageStore(spark, warehouse)
+        self.store = LineageStore(spark, warehouse, self.run_id)
         # table-format seam (warehouse.py): Iceberg tables when a catalog
         # is configured on the session, parquet dirs otherwise
         self.tables = tables or stage_store(spark, warehouse)

@@ -54,7 +54,7 @@ def add_doc_id(sources: DataFrame) -> DataFrame:
     hex string: the column rides every row of the corpus-wide exchange
     and every keyed join, and the 32-byte form is half the shuffle width
     (measured 2.36x local[32] validate throughput,
-    tools/shuffle_payload_study.py). `hex_doc_id` re-derives the exact
+    BENCH.md §6). `hex_doc_id` re-derives the exact
     old string ids at driver/report edges."""
     if "doc_id" in sources.columns:
         return sources

@@ -46,22 +46,24 @@ def spread_scan(spark: SparkSession, sf_dir: str, name: str, df: DataFrame) -> D
     full plan analysis + RDD conversion per call). FAILS CLOSED: when
     the size probe errors (exotic filesystems), the guard is skipped —
     an unconditional repartition would full-shuffle a corpus-scale scan
-    exactly where the docstring promises a no-op."""
+    exactly where the docstring promises a no-op. The same holds for a
+    maxPartitionBytes value the size parse does not understand ("0.5g",
+    "0") — no guard rather than a crash."""
     import re as _re
 
     from harvesting_validator_spark import fs as _fs
 
-    mpb_raw = spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728b")
-    m = _re.match(r"(\d+)([bkmg]?)", mpb_raw.lower())
-    mpb = int(m.group(1)) * {"": 1, "b": 1, "k": 1 << 10, "m": 1 << 20,
-                             "g": 1 << 30}[m.group(2)]
     try:
+        mpb_raw = spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728b")
+        m = _re.fullmatch(r"(\d+)([bkmgt]?)b?", mpb_raw.strip().lower())
+        mpb = int(m.group(1)) * {"": 1, "b": 1, "k": 1 << 10, "m": 1 << 20,
+                                 "g": 1 << 30, "t": 1 << 40}[m.group(2)]
         scan_bytes = _fs.tree_size(spark, f"{sf_dir}/{name}.parquet")
+        if not scan_bytes:
+            return df
+        scan_parts = max(1, -(-scan_bytes // mpb))
     except Exception:
         return df
-    if not scan_bytes:
-        return df
-    scan_parts = max(1, -(-scan_bytes // mpb))
     want = spark.sparkContext.defaultParallelism
     if scan_parts < want:
         return df.repartition(want)

@@ -17,11 +17,17 @@ work's output is materialized (or superseded by a later checkpoint).
 Works on the classic (py4j) PySpark backend used here; every helper
 degrades to a no-op if the gateway internals are unavailable (e.g. Spark
 Connect), so callers never need to guard.
+
+The module also builds the driver's small tables (``local_frame``): from
+Arrow, so evaluating them never starts a Python worker.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
+from collections.abc import Iterable
+
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def persistent_rdd_ids(spark: SparkSession) -> set[int]:
@@ -115,3 +121,37 @@ def release_bucketed_tables(spark: SparkSession) -> int:
         except Exception:
             pass
     return released
+
+
+# --- driver-built frames -------------------------------------------------------
+# ``spark.createDataFrame(<python list>, schema)`` goes through
+# sc.parallelize + a pickled Python RDD, so EVERY evaluation of the frame
+# runs a Python-worker task (~0.5 s per collect of a 21-row lineage
+# append on a 4-core box). An Arrow table is shipped to the JVM once and
+# evaluated there (~0.03 s). Every small table the driver builds (lineage
+# rows, SHACL spec tables, SPARQL VALUES, empty placeholders) goes here.
+
+
+def local_frame(
+    spark: SparkSession, rows: Iterable[tuple], schema: str | StructType
+) -> DataFrame:
+    """DataFrame of driver-side ``rows`` (positional tuples) under
+    ``schema`` (DDL string or StructType), built from a ``pyarrow.Table``.
+    Rows are type-checked with the verifier ``createDataFrame(list)``
+    uses, so a value that does not fit its column raises instead of being
+    coerced (pyarrow alone would truncate 1.5 into an int column)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _make_type_verifier, _parse_datatype_string
+
+    struct = _parse_datatype_string(schema) if isinstance(schema, str) else schema
+    rows = list(rows)
+    verify = _make_type_verifier(struct)
+    for row in rows:
+        verify(row)
+    arrow = to_arrow_schema(struct)
+    cols = zip(*rows) if rows else [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, struct)

@@ -42,6 +42,7 @@ import functools
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from harvesting_validator_spark.runtime import local_frame
 from harvesting_validator_spark.shacl.model import (
     RDF_TYPE,
     SEVERITY_VIOLATION,
@@ -108,7 +109,7 @@ def compute_focus(triples: DataFrame, shapes: ShapesGraph,
         (s.iri, c) for s in shapes.shapes for c in s.target_classes
     ]
     if class_rows:
-        spec = spark.createDataFrame(class_rows, "shape string, target_class string")
+        spec = local_frame(spark, class_rows, "shape string, target_class string")
         typed = triples.filter(F.col("pred") == RDF_TYPE).select(
             "doc_id", F.col("subj").alias("focus_node"),
             F.col("obj_value").alias("cls"),
@@ -120,7 +121,7 @@ def compute_focus(triples: DataFrame, shapes: ShapesGraph,
 
     node_rows = [(s.iri, n) for s in shapes.shapes for n in s.target_nodes]
     if node_rows:
-        spec_n = spark.createDataFrame(node_rows, "shape string, node string")
+        spec_n = local_frame(spark, node_rows, "shape string, node string")
         docs = triples.select("doc_id").distinct()
         frames.append(
             docs.crossJoin(F.broadcast(spec_n)).select(
@@ -134,7 +135,7 @@ def compute_focus(triples: DataFrame, shapes: ShapesGraph,
         (s.iri, p) for s in shapes.shapes for p in s.target_subjects_of
     ]
     if subj_rows:
-        spec_s = spark.createDataFrame(subj_rows, "shape string, tpred string")
+        spec_s = local_frame(spark, subj_rows, "shape string, tpred string")
         frames.append(
             triples.join(F.broadcast(spec_s), triples.pred == spec_s.tpred)
             .select("doc_id", F.col("subj").alias("focus_node"), "shape")
@@ -143,7 +144,7 @@ def compute_focus(triples: DataFrame, shapes: ShapesGraph,
         (s.iri, p) for s in shapes.shapes for p in s.target_objects_of
     ]
     if obj_rows:
-        spec_o = spark.createDataFrame(obj_rows, "shape string, tpred string")
+        spec_o = local_frame(spark, obj_rows, "shape string, tpred string")
         frames.append(
             triples.filter(F.col("obj_kind") != "literal")
             .join(F.broadcast(spec_o), F.col("pred") == spec_o.tpred)
@@ -152,8 +153,8 @@ def compute_focus(triples: DataFrame, shapes: ShapesGraph,
 
     base = _union_all(frames)
     if base is None:
-        return spark.createDataFrame(
-            [], "doc_id binary, focus_node string, shape string"
+        return local_frame(
+            spark, [], "doc_id binary, focus_node string, shape string"
         )
 
     # nested sh:node: child focus = value nodes of the parent property.
@@ -170,8 +171,8 @@ def compute_focus(triples: DataFrame, shapes: ShapesGraph,
     all_frames = [base]
     frontier = base
     if depth:
-        nspec = spark.createDataFrame(
-            nest_rows, "parent_shape string, path string, child_shape string"
+        nspec = local_frame(
+            spark, nest_rows, "parent_shape string, path string, child_shape string"
         )
         for _ in range(depth):
             child = (
@@ -283,8 +284,8 @@ def _nested_closure(
         F.col("focus_node").alias("r_node"),
         F.col("shape").alias("r_shape"),
     )
-    nspec = spark.createDataFrame(
-        nest_rows, "parent_shape string, path string, child_shape string"
+    nspec = local_frame(
+        spark, nest_rows, "parent_shape string, path string, child_shape string"
     )
     frames = [base]
     frontier = base
@@ -432,8 +433,8 @@ def _path_value_frames(
         whose object is the focus) gated by a broadcast (shape, path,
         pred) spec — shared by standalone inverse paths and the inverse
         members of alternatives."""
-        ispec = F.broadcast(spark.createDataFrame(
-            spec_rows, "i_shape string, i_path string, i_pred string"
+        ispec = F.broadcast(local_frame(
+            spark, spec_rows, "i_shape string, i_path string, i_pred string"
         ))
         return (
             focus.alias("f")
@@ -465,7 +466,7 @@ def _path_value_frames(
     def _forward_hop_frame(spec_rows, schema):
         """focus⋈triples forward hop gated by a broadcast (shape, path,
         pred) spec — shared by alternative and the zero-or-one one-step."""
-        spec = F.broadcast(spark.createDataFrame(spec_rows, schema))
+        spec = F.broadcast(local_frame(spark, spec_rows, schema))
         return (
             focus.alias("f")
             .join(
@@ -498,8 +499,8 @@ def _path_value_frames(
             parts.append(_inverse_hop_frame(alt_inv_rows))
         frames.append(_union_all(parts).distinct())
     if zoo_rows:
-        zspec = F.broadcast(spark.createDataFrame(
-            [(s, p) for s, p, _ in zoo_rows], "s_shape string, s_path string"
+        zspec = F.broadcast(local_frame(
+            spark, [(s, p) for s, p, _ in zoo_rows], "s_shape string, s_path string"
         ).distinct())
         zero_step = (
             focus.join(zspec, focus.shape == F.col("s_shape"))
@@ -939,8 +940,8 @@ def validate(
             F.count(F.lit(1)).alias("cnt")
         )
     if max_rows:
-        spec = F.broadcast(spark.createDataFrame(
-            max_rows, "m_shape string, m_pred string, m_max int, m_msg string, m_src string"
+        spec = F.broadcast(local_frame(
+            spark, max_rows, "m_shape string, m_pred string, m_max int, m_msg string, m_src string"
         ))
         over = counts.join(
             spec,
@@ -958,8 +959,8 @@ def validate(
             F.col("m_src").alias("source_shape"),
         )))
     if min_rows:
-        spec = F.broadcast(spark.createDataFrame(
-            min_rows, "m_shape string, m_pred string, m_min int, m_msg string, m_src string"
+        spec = F.broadcast(local_frame(
+            spark, min_rows, "m_shape string, m_pred string, m_min int, m_msg string, m_src string"
         ))
         # rename the counts side fully: counts derives from focus, so a
         # bare join would be an ambiguous self-join
@@ -992,8 +993,8 @@ def validate(
             F.col("m_src").alias("source_shape"),
         )))
     if hv_rows:
-        spec = F.broadcast(spark.createDataFrame(
-            hv_rows, "h_shape string, h_pred string, h_val string, h_msg string, h_src string"
+        spec = F.broadcast(local_frame(
+            spark, hv_rows, "h_shape string, h_pred string, h_val string, h_msg string, h_src string"
         ))
         having = (
             ftrip.join(
@@ -1043,8 +1044,8 @@ def validate(
         for s in shapes.shapes for p in s.properties if p.unique_lang
     ]
     if ul_rows:
-        spec = F.broadcast(spark.createDataFrame(
-            ul_rows, "u_shape string, u_path string, u_msg string, u_src string"
+        spec = F.broadcast(local_frame(
+            spark, ul_rows, "u_shape string, u_path string, u_msg string, u_src string"
         ))
         dup = (
             ftrip.filter(F.col("obj_lang").isNotNull())
@@ -1087,8 +1088,8 @@ def validate(
         if other is not None
     ]
     if pair_rows:
-        spec = F.broadcast(spark.createDataFrame(
-            pair_rows,
+        spec = F.broadcast(local_frame(
+            spark, pair_rows,
             "p_shape string, p_path string, p_other string, p_comp string, "
             "p_msg string, p_src string",
         ))
@@ -1173,8 +1174,8 @@ def validate(
         for s in shapes.shapes for p in s.properties if p.class_ is not None
     ]
     if class_rows:
-        spec = F.broadcast(spark.createDataFrame(
-            class_rows, "c_shape string, c_pred string, c_class string, c_msg string, c_src string"
+        spec = F.broadcast(local_frame(
+            spark, class_rows, "c_shape string, c_pred string, c_class string, c_msg string, c_src string"
         ))
         typed = (
             triples.filter(F.col("pred") == RDF_TYPE)
@@ -1268,8 +1269,8 @@ def validate(
         probes = []
         q_cand = None
         if q_rows:
-            qspec = F.broadcast(spark.createDataFrame(
-                q_rows,
+            qspec = F.broadcast(local_frame(
+                spark, q_rows,
                 "q_shape string, q_path string, q_sub string, q_min int, "
                 "q_max int, q_msg string, q_src string",
             ))
@@ -1290,8 +1291,8 @@ def validate(
             ))
         q_sib = None
         if q_rows and sib_rows:
-            sibspec = F.broadcast(spark.createDataFrame(
-                sib_rows, "b_src string, b_sub string"
+            sibspec = F.broadcast(local_frame(
+                spark, sib_rows, "b_src string, b_sub string"
             ))
             # each disjoint candidate value is ALSO probed against every
             # sibling shape — same recursive validate answers both
@@ -1304,8 +1305,8 @@ def validate(
             ))
         n_base = None
         if not_rows:
-            nspec = F.broadcast(spark.createDataFrame(
-                not_rows, "n_shape string, n_sub string"
+            nspec = F.broadcast(local_frame(
+                spark, not_rows, "n_shape string, n_sub string"
             ))
             n_base = focus.join(
                 nspec, F.col("shape") == F.col("n_shape")
@@ -1315,8 +1316,8 @@ def validate(
             ))
         l_base = None
         if logic_rows:
-            lspec = F.broadcast(spark.createDataFrame(
-                logic_rows,
+            lspec = F.broadcast(local_frame(
+                spark, logic_rows,
                 "l_shape string, l_comp string, l_member string, l_n int",
             ))
             l_base = focus.join(
@@ -1436,8 +1437,8 @@ def validate(
             )))
             # min side starts from the focus table so focus nodes with
             # ZERO path values (or zero conforming values) violate too
-            qmin_spec = F.broadcast(spark.createDataFrame(
-                [r for r in q_rows if r[3] is not None],
+            qmin_spec = F.broadcast(local_frame(
+                spark, [r for r in q_rows if r[3] is not None],
                 "q_shape string, q_path string, q_sub string, q_min int, "
                 "q_max int, q_msg string, q_src string",
             )) if any(r[3] is not None for r in q_rows) else None
@@ -1632,8 +1633,8 @@ def validate(
 
     result = _union_all(frames)
     if result is None:
-        return spark.createDataFrame(
-            [],
+        return local_frame(
+            spark, [],
             "doc_id binary, shape string, focus_node string, "
             "result_path string, value string, value_kind string, "
             "constraint_component string, severity string, message string, "

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 from harvesting_validator_spark import fs
 from harvesting_validator_spark.operators.filtering import nt_lines
+from harvesting_validator_spark.runtime import local_frame
 
 NT_FORMAT = "application/n-triples"
 NT_EXTENSION = "nt"
@@ -90,8 +91,8 @@ def write_nt(
         )
         for name in sorted(files)
     ]
-    meta = spark.createDataFrame(
-        rows,
+    meta = local_frame(
+        spark, rows,
         "share_uri string, file_size bigint, file_name string, "
         "format string, extension string, created double, "
         "job_id string, container string",

@@ -859,7 +859,7 @@ def _fast_parse_turtle(text: str) -> list[Triple] | None:
 # doc_id is BINARY (the raw 32 sha256 bytes, not the 64-char hex string):
 # the doc_id column rides EVERY row of the corpus-wide exchange and every
 # keyed join/groupBy, and halving its width measurably moves the
-# bandwidth-bound validate stage (tools/shuffle_payload_study.py: 2.36x
+# bandwidth-bound validate stage (BENCH.md §6: 2.36x
 # local[32] throughput, 8->32 scaling efficiency 0.126 -> 0.306 at 2M
 # docs). Driver-facing queries re-hex at the edge (lower(hex(..)) ==
 # the old string ids exactly).

@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from harvesting_validator_spark.runtime import local_frame
+
 EX = "http://example.com/ns#"
 RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
 
@@ -99,8 +101,8 @@ def golden_sources(spark: SparkSession) -> DataFrame:
         ("repo0", f"data/pages/{name}.ttl", f"commit-{name}", "turtle", text)
         for name, text in GOLDEN_DOCS.items()
     ]
-    return spark.createDataFrame(
-        rows, "repo string, path string, commit string, lang string, content string"
+    return local_frame(
+        spark, rows, "repo string, path string, commit string, lang string, content string"
     )
 
 

@@ -172,6 +172,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from harvesting_validator_spark.runtime import local_frame
+
 RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
 XSD = "http://www.w3.org/2001/XMLSchema#"
 DOC_GRAPH_PREFIX = "urn:doc:"  # GRAPH <urn:doc:HEX> names one document
@@ -2221,7 +2223,7 @@ class _Compiler:
                     ]
             rows.append(tuple(flat))
         schema = ", ".join(f"{c} string" for c in cols)
-        return spark.createDataFrame(rows, schema), binds
+        return local_frame(spark, rows, schema), binds
 
     def _merge_values(self, df, binds, vdf, vbinds):
         """Join the inline VALUES table with SPARQL join COMPATIBILITY:
@@ -3202,8 +3204,8 @@ def _const_quads(spark, blocks: tuple) -> DataFrame:
                 olang = tp.o.lang.lower() if tp.o.lang else None
             rows.append((gid, tp.s.value, tp.p.value, oval, okind, odt,
                          olang))
-    return spark.createDataFrame(
-        sorted(
+    return local_frame(
+        spark, sorted(
             set(rows),
             key=lambda r: (r[0].hex(),) + tuple(c or "" for c in r[1:]),
         ),
@@ -3354,16 +3356,16 @@ def _describe_frame(comp: "_Compiler", q: Query) -> DataFrame:
             nodes = one if nodes is None else nodes.unionByName(one)
     const = [t.value for t in (q.projection or []) if isinstance(t, Iri)]
     if const:
-        cdf = triples.sparkSession.createDataFrame(
-            [(c,) for c in const], "node string"
+        cdf = local_frame(
+            triples.sparkSession, [(c,) for c in const], "node string"
         )
         nodes = cdf if nodes is None else nodes.unionByName(cdf)
     if nodes is None:
         # DESCRIBE ?x with no WHERE: the solution sequence is one empty
         # solution, the target var is unbound, nothing is described —
         # an EMPTY graph, not an error (SPARQL 16.4)
-        return triples.sparkSession.createDataFrame(
-            [],
+        return local_frame(
+            triples.sparkSession, [],
             "subj string, pred string, obj_value string, "
             "obj_kind string, obj_datatype string, obj_lang string",
         )

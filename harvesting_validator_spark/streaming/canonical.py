@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from harvesting_validator_spark import fs
+from harvesting_validator_spark.runtime import local_frame
 
 MENTIONS_SCHEMA = (
     "entity string, attr_text string, strong_keys array<string>, key string"
@@ -57,7 +58,7 @@ class CanonicalStreamState:
 
     def _read(self, path: str, schema: str) -> DataFrame:
         if not fs.exists(self.spark, path):
-            return self.spark.createDataFrame([], schema)
+            return local_frame(self.spark, [], schema)
         return self.spark.read.parquet(path)
 
     def mentions(self) -> DataFrame:

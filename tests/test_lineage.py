@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 from harvesting_validator_spark.lineage import (
     STATUS_FAILED,
     STATUS_SUCCESS,
+    TASK_STAGE,
     CheckpointedRunner,
     LineageStore,
     run_validation_checkpointed,
@@ -18,6 +19,25 @@ from harvesting_validator_spark.sources.synthetic import (
     generate_entity_sources,
     generate_sources,
 )
+
+
+def assert_rows_match_table(runner: CheckpointedRunner) -> None:
+    """The runner answers stage_status/next_attempt from the rows it
+    loaded at start plus the rows it appended; a fresh table-reading
+    store must give the same answers for every stage of the run."""
+    fresh = LineageStore(runner.spark, runner.warehouse)
+    stages = {
+        r.stage
+        for r in fresh.read().filter(F.col("run_id") == runner.run_id)
+        .select("stage").distinct().collect()
+    }
+    for stage in stages | {TASK_STAGE, "never_ran"}:
+        assert runner.store.stage_status(runner.run_id, stage) == (
+            fresh.stage_status(runner.run_id, stage)
+        ), stage
+        assert runner.store.next_attempt(runner.run_id, stage) == (
+            fresh.next_attempt(runner.run_id, stage)
+        ), stage
 
 
 def test_stage_skip_on_resume(spark, tmp_path):
@@ -57,6 +77,7 @@ def test_failure_recorded_and_retry(spark, tmp_path):
     r = CheckpointedRunner(spark, wh, run_id="runf")
     with pytest.raises(ValueError):
         r.stage("fragile", build)
+    assert_rows_match_table(r)
     store = LineageStore(spark, wh)
     assert store.stage_status("runf", "fragile") == STATUS_FAILED
     err = (
@@ -71,8 +92,10 @@ def test_failure_recorded_and_retry(spark, tmp_path):
     # retry = same run_id after the fault clears (AppController./retry analog)
     boom["on"] = False
     r2 = CheckpointedRunner(spark, wh, run_id="runf")
+    assert r2.store.next_attempt("runf", "fragile") == 2
     assert r2.stage("fragile", build).count() == 3
     assert store.stage_status("runf", "fragile") == STATUS_SUCCESS
+    assert_rows_match_table(r2)
 
 
 def test_checkpointed_pipeline_resume_identical(spark, tmp_path):
@@ -151,3 +174,25 @@ def test_mid_pipeline_resume_validation_then_kg(spark, tmp_path):
         r2.executed
     )
     assert spark.read.parquet(f"{wh}/mid/canonical_graph").count() == 9
+    assert_rows_match_table(r2)
+    assert r2.store.next_attempt("mid", TASK_STAGE) == 3
+
+
+def test_stage_reads_no_lineage(spark, tmp_path):
+    """Job-count guard: a runner answers stage_status/next_attempt from
+    the rows it loaded at start, so one stage costs only its BUSY append,
+    the stage write, the per-partition count and its SUCCESS append. A
+    per-stage lineage read coming back adds jobs and fails here."""
+    sc = spark.sparkContext
+    runner = CheckpointedRunner(spark, str(tmp_path / "wh"), run_id="jobs")
+    group = "lineage-job-count"
+    sc.setJobGroup(group, "one runner.stage")
+    try:
+        runner.stage("tiny", lambda: spark.range(3).toDF("x"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    # measured with Spark 4.1.2: BUSY append, stage write, read-back schema
+    # inference, per-partition count (2 jobs), SUCCESS append. The
+    # per-stage stage_status + next_attempt reads cost 3 more (9 in all).
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 6
